@@ -1,4 +1,5 @@
 """Application assembly: the reference's EP2 CLI chain
-(Dockerfile:277-287 extract → clean → load → dashboard-prep) as one
-lazy Spark job — see app.pipeline.run_pipeline.
+(Dockerfile:277-287 extract → clean → load → dashboard-prep) over one
+shared token table, with the LDA-theme and RF-classifier branches run
+concurrently — see app.pipeline.run_pipeline.
 """

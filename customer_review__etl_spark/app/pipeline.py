@@ -3,9 +3,27 @@
 Reference flow (Dockerfile:277-287; cleaner.process_pipeline
 cleaner.py:288-324): extract → clean/dedup → text-normalize → LDA
 themes → classifier + metrics → CSV/models/metrics-JSON → dashboard
-aggregates. Here the whole chain is ONE lazy Spark job: no CSV
-hand-offs between stages (SURVEY §1.1 — files-as-IPC becomes lazy
-DataFrame chaining), parquet + model dir + metrics JSON at the end.
+aggregates. Stages hand each other lazy DataFrames, not CSV files
+(SURVEY §1.1 — files-as-IPC becomes DataFrame chaining), but a run
+is still many Spark jobs (estimator passes, LDA iterations, RF
+levels, sinks).
+
+Shape of one run:
+  1. extract + clean + tokenize into ONE token table, persisted and
+     materialized by the ``rows_clean`` count — the only tokenize and
+     dedup-window shuffle of the run;
+  2. two branches over that table, concurrently, each in its own FAIR
+     scheduler pool:
+       themes     — LDA fit → topics → processed parquet, dashboard
+                    CSVs, the bucket's processed-data CSV;
+       classifier — md5 split → RF fit → metrics → model dir.
+     They are independent: the RF predicts ``lang`` from ``unigrams``,
+     both columns of the token table, and never reads a topic. Run
+     serially, each branch's single-job stretches (LDA iterations, RF
+     levels) leave most cores idle; overlapped, the other branch's
+     tasks fill them;
+  3. after the join: the token table released, then the metrics
+     JSON and the bucket's metrics + model publish.
 
 Stage map (reference loc → here):
   clean_dataframe   cleaner.py:77-116  → _clean (P1-P6)
@@ -18,8 +36,10 @@ Stage map (reference loc → here):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -77,33 +97,70 @@ def run_pipeline(
     versioned key layout (upload_to_s3, ml_pipeline_dag.py:225-260):
     processed data under data/, metrics under metrics/, the model dir
     under models/{execution_ts}/ — and the returned dict gains the
-    "s3_locations"-style manifest."""
+    "s3_locations"-style manifest.
+
+    The themes and classifier branches run on two driver threads (see
+    the module docstring). Each thread target is wrapped in
+    ``inheritable_thread_target`` so the caller's job group and
+    description carry over to the branch's jobs. Every table cached
+    here is released before return, also on failure."""
+    from ..sources.objectstore import ObjectBucket, publish_run
+
     docs = tables.load(spark, sf_dir, "documents")
     n_raw = docs.count()
 
-    cleaned = _clean(docs)
-    toks = P.with_tokens(cleaned)
-    n_clean = toks.count()
-
-    lda_model, transformed = P.fit_lda(toks)
-    themed = P.assign_topics(transformed).cache()
-
-    split = P.md5_split(themed.select("doc_id", "lang", "unigrams"), "doc_id")
-    clf_model, predictions, train = P.fit_classifier(split)
-    metrics_df = P.classification_metrics(predictions)
-    m = metrics_df.collect()[0]
-
     processed_path = f"{out_dir}/processed"
-    sinks.write_parquet(
-        themed.select("doc_id", "lang", "source", "topic", "theme"),
-        processed_path,
-    )
     dist_path = f"{out_dir}/theme_distribution"
-    sinks.write_csv(theme_distribution(themed), dist_path, single_file=True)
     words_path = f"{out_dir}/top_words"
-    sinks.write_csv(top_words(themed), words_path, single_file=True)
     model_path = f"{out_dir}/models/classifier"
-    sinks.save_model(clf_model, model_path)
+    bucket = (
+        ObjectBucket(spark, bucket_url).ensure()
+        if bucket_url is not None
+        else None
+    )
+    sc = spark.sparkContext
+    toks = P.with_tokens(_clean(docs)).persist(StorageLevel.MEMORY_AND_DISK)
+
+    def _themes() -> dict[str, Any]:
+        sc.setLocalProperty("spark.scheduler.pool", "run_pipeline_themes")
+        _, transformed = P.fit_lda(toks)
+        themed = P.assign_topics(transformed).cache()
+        try:
+            processed = themed.select(
+                "doc_id", "lang", "source", "topic", "theme"
+            )
+            sinks.write_parquet(processed, processed_path)
+            sinks.write_csv(
+                theme_distribution(themed), dist_path, single_file=True
+            )
+            sinks.write_csv(top_words(themed), words_path, single_file=True)
+            if bucket is None:
+                return {}
+            return publish_run(bucket, execution_ts, processed_df=processed)
+        finally:
+            themed.unpersist()
+
+    def _classifier() -> Any:
+        sc.setLocalProperty("spark.scheduler.pool", "run_pipeline_classifier")
+        split = P.md5_split(
+            toks.select("doc_id", "lang", "unigrams"), "doc_id"
+        )
+        clf_model, predictions, _ = P.fit_classifier(split)
+        m = P.classification_metrics(predictions).collect()[0]
+        sinks.save_model(clf_model, model_path)
+        return m
+
+    try:
+        n_clean = toks.count()
+        # One wrap per target: each wrap clones the caller's local
+        # properties, so each branch sets its pool on its own copy.
+        themes_fn = inheritable_thread_target(spark)(_themes)
+        clf_fn = inheritable_thread_target(spark)(_classifier)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            themes, clf = pool.submit(themes_fn), pool.submit(clf_fn)
+            manifest, m = themes.result(), clf.result()
+    finally:
+        toks.unpersist()
 
     metrics = {
         "rows_raw": n_raw,
@@ -123,17 +180,11 @@ def run_pipeline(
         "model_path": model_path,
         "metrics_path": metrics_path,
     }
-    if bucket_url is not None:
-        from ..sources.objectstore import ObjectBucket, publish_run
-
-        bucket = ObjectBucket(spark, bucket_url).ensure()
-        result["store_locations"] = publish_run(
-            bucket,
-            execution_ts,
-            processed_df=themed.select(
-                "doc_id", "lang", "source", "topic", "theme"
-            ),
-            metrics=metrics,
-            models_dir=model_path,
+    if bucket is not None:
+        manifest.update(
+            publish_run(
+                bucket, execution_ts, metrics=metrics, models_dir=model_path
+            )
         )
+        result["store_locations"] = manifest
     return result

@@ -66,40 +66,43 @@ def fit_lda(df_tokens: DataFrame) -> tuple[PipelineModel, DataFrame]:
     every downstream result — are the same as Pipeline.fit's) so the
     LDA input can be persisted: the online LDA optimizer runs maxIter
     sampling jobs over its input, and Pipeline.fit hands it the lazy
-    tokenize→CV→IDF chain, re-deriving the whole feature pipeline per
-    iteration. Persisting tokens (3 estimator passes) and the tfidf
-    vectors (maxIter LDA jobs) bounds the recompute: both are
-    per-document rows (tokens ≤ doc length, vectors ≤ vocab 1000
-    sparse), MEMORY_AND_DISK so an over-memory corpus spills instead
-    of failing."""
+    CV→IDF chain, re-deriving the feature pipeline per iteration.
+
+    Persistence is split by owner. The CALLER owns ``df_tokens``: the
+    CV and IDF fits and the transform each pass over it, so a caller
+    whose token column is costly (tokenize + window dedup) persists it
+    first, and releases it when every consumer is done. Another thread
+    may be reading the same cached table (run_pipeline's classifier
+    branch), so fit_lda never touches its cache. fit_lda owns the
+    tfidf vectors (maxIter LDA jobs): persisted MEMORY_AND_DISK (per-
+    document rows ≤ vocab 1000 sparse, so an over-memory corpus spills
+    instead of failing) and released once the fit is done. Consumers
+    of ``transformed`` then recompute the one feature pass from
+    ``df_tokens``."""
     from pyspark import StorageLevel
 
-    toks = df_tokens.persist(StorageLevel.MEMORY_AND_DISK)
     cv = CountVectorizer(
         inputCol="tokens",
         outputCol="tf",
         vocabSize=VOCAB_SIZE,
         minDF=MIN_DF,
         maxDF=MAX_DF,
-    ).fit(toks)
-    tf = cv.transform(toks)
+    ).fit(df_tokens)
+    tf = cv.transform(df_tokens)
     idf = IDF(inputCol="tf", outputCol="tfidf").fit(tf)
     feats = idf.transform(tf).persist(StorageLevel.MEMORY_AND_DISK)
-    lda = LDA(
-        k=N_TOPICS,
-        maxIter=LDA_MAX_ITER,
-        seed=SEED,
-        featuresCol="tfidf",
-        topicDistributionCol="topic_dist",
-    ).fit(feats)
+    try:
+        lda = LDA(
+            k=N_TOPICS,
+            maxIter=LDA_MAX_ITER,
+            seed=SEED,
+            featuresCol="tfidf",
+            topicDistributionCol="topic_dist",
+        ).fit(feats)
+    finally:
+        feats.unpersist()
     model = PipelineModel(stages=[cv, idf, lda])
-    transformed = lda.transform(feats)
-    # the fit is done; consumers of `transformed` recompute the (one)
-    # feature pass lazily — the iterative phase above is what needed
-    # the pin
-    toks.unpersist()
-    feats.unpersist()
-    return model, transformed
+    return model, lda.transform(feats)
 
 
 def assign_topics(transformed: DataFrame) -> DataFrame:
@@ -277,46 +280,39 @@ def fit_classifier(
 def classification_metrics(predictions: DataFrame) -> DataFrame:
     """M9: accuracy + weighted F1 from the confusion counts — computed
     with exact integer counts and deterministic divisions (no
-    evaluator RNG), returned as a single-row DataFrame."""
-    conf = predictions.groupBy("label", "prediction").agg(
-        F.count(F.lit(1)).alias("n")
+    evaluator RNG), returned as a single-row DataFrame.
+
+    The (label, prediction, n) confusion table is collected ONCE (it
+    has at most classes² rows) and every figure is derived from it on
+    the driver. The per-class F1 terms are summed in sorted label
+    order, so the float result does not depend on row arrival order.
+    Only true labels carry weight: a prediction that is no row's label
+    has support 0 and adds nothing but its count to ``predicted``."""
+    conf = (
+        predictions.groupBy("label", "prediction")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
     )
-    total = conf.agg(F.sum("n").alias("t")).collect()[0]["t"]
-    correct = (
-        conf.filter(F.col("label") == F.col("prediction"))
-        .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("c"))
-        .collect()[0]["c"]
-    )
-    per_class = (
-        conf.groupBy("label")
-        .agg(F.sum("n").alias("support"))
-        .join(
-            conf.groupBy("prediction").agg(F.sum("n").alias("predicted")),
-            F.col("label") == F.col("prediction"),
-            "left",
-        )
-        .join(
-            conf.filter(F.col("label") == F.col("prediction"))
-            .select("label", F.col("n").alias("tp")),
-            "label",
-            "left",
-        )
-        .select(
-            "label",
-            "support",
-            F.coalesce("predicted", F.lit(0)).alias("predicted"),
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-        )
-    )
-    rows = per_class.collect()
+    support: dict = {}
+    predicted: dict = {}
+    tp: dict = {}
+    for r in conf:
+        label, pred, n = r["label"], r["prediction"], r["n"]
+        support[label] = support.get(label, 0) + n
+        predicted[pred] = predicted.get(pred, 0) + n
+        if label == pred:
+            tp[label] = n
+    total = sum(support.values())
+    correct = sum(tp.values())
     f1_weighted = 0.0
-    for r in rows:
-        prec = r["tp"] / r["predicted"] if r["predicted"] else 0.0
-        rec = r["tp"] / r["support"] if r["support"] else 0.0
+    for label in sorted(support):
+        t, p = tp.get(label, 0), predicted.get(label, 0)
+        prec = t / p if p else 0.0
+        rec = t / support[label]
         f1 = 2 * prec * rec / (prec + rec) if (prec + rec) else 0.0
-        f1_weighted += f1 * r["support"] / total
+        f1_weighted += f1 * support[label] / total
     sess = predictions.sparkSession
     return sess.createDataFrame(
-        [(total, int(correct), correct / total if total else 0.0, f1_weighted)],
+        [(total, correct, correct / total if total else 0.0, f1_weighted)],
         "n_test BIGINT, n_correct BIGINT, accuracy DOUBLE, weighted_f1 DOUBLE",
     )

@@ -36,12 +36,21 @@ def lda_model_m(spark: SparkSession, sf_dir: str):
     is a JVM artifact, not a result: every consumer still computes
     its own output from the parquet corpus through model.transform /
     describeTopics. bench.py pays and times the fit as its own
-    `lda_fit_build` row (the ml_fit_build pattern)."""
+    `lda_fit_build` row (the ml_fit_build pattern). The token input is
+    persisted here, for the fit's estimator passes only (fit_lda leaves
+    its input's cache to the caller)."""
+    from pyspark import StorageLevel
+
     if sf_dir not in _LDA_MODELS:
         with _LDA_GUARD:
             if sf_dir not in _LDA_MODELS:
-                toks = P.with_tokens(_docs(spark, sf_dir))
-                model, _ = P.fit_lda(toks)
+                toks = P.with_tokens(_docs(spark, sf_dir)).persist(
+                    StorageLevel.MEMORY_AND_DISK
+                )
+                try:
+                    model, _ = P.fit_lda(toks)
+                finally:
+                    toks.unpersist()
                 _LDA_MODELS[sf_dir] = model
     return _LDA_MODELS[sf_dir]
 

@@ -154,6 +154,29 @@ def test_classifier_metrics_ranges(spark):
     assert m["n_correct"] <= m["n_test"]
 
 
+def test_classification_metrics_hand_computed(spark):
+    """Confusion counts built by hand. Label 2.0 is never predicted and
+    prediction 3.0 is no row's label:
+
+        label 0: (0,0)x3 (0,1)x1  support 4, tp 3, predicted 4 -> F1 3/4
+        label 1: (1,1)x1 (1,3)x2  support 3, tp 1, predicted 2 -> F1 2/5
+        label 2: (2,0)x1 (2,3)x2  support 3, tp 0, predicted 0 -> F1 0
+
+    weighted F1 = (4*0.75 + 3*0.4 + 3*0) / 10 = 0.42."""
+    pairs = (
+        [(0.0, 0.0)] * 3 + [(0.0, 1.0)]
+        + [(1.0, 1.0)] + [(1.0, 3.0)] * 2
+        + [(2.0, 0.0)] + [(2.0, 3.0)] * 2
+    )
+    preds = spark.createDataFrame(pairs, "label DOUBLE, prediction DOUBLE")
+    rows = P.classification_metrics(preds.repartition(3)).collect()
+    assert len(rows) == 1
+    m = rows[0]
+    assert (m["n_test"], m["n_correct"]) == (10, 4)
+    assert m["accuracy"] == 0.4
+    assert m["weighted_f1"] == pytest.approx(0.42, abs=1e-15)
+
+
 def test_stratified_split_property_quotas_and_parity(spark):
     """Property check over arbitrary strata shapes (hypothesis): for
     ANY multiset of stratum sizes — including singletons, a dominant
